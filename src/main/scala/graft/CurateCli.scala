@@ -858,17 +858,7 @@ object CurateCli {
         System.err.println(err); System.err.println(Usage); sys.exit(2)
       case Right(o) if o.showHelp => println(Usage)
       case Right(o) =>
-        val spark = SparkSession.builder()
-          .master(sys.env.getOrElse("SPARK_GRAFT_MASTER",
-            s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-          .appName("graft-curate")
-          .config("spark.sql.extensions", "graft.GraftExtensions")
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-          .getOrCreate()
+        val spark = core.Session.start("graft-curate", core.Session.Curate)
         try {
           if (o.buildDict) {
             val n = buildDictionary(spark, o)

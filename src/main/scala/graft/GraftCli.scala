@@ -1357,22 +1357,7 @@ object GraftCli {
     }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER",
-        s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]"))
-      .appName("graft-etl")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // warehouse tables are trial-partitioned; different uploads write
-      // different optional columns, and partition values are strings
-      .config("spark.sql.parquet.mergeSchema", "true")
-      .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = core.Session.start("graft-etl", core.Session.Etl)
     val code = try run(spark, args.toSeq) finally spark.stop()
     if (code != 0) sys.exit(code)
   }

@@ -66,15 +66,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val dstDir = sys.env.getOrElse("SPARK_GRAFT_PROBE_DIR", "/root/repo/target/sf1probe")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = core.Session.start("graft-scaleprobe", core.Session.Query)
 
     if (!new java.io.File(s"$dstDir/lineitem.parquet").exists())
       replicate(spark, srcDir, dstDir, copies = 10)

@@ -930,16 +930,11 @@ object Dedup {
         org.apache.spark.sql.types.StructField("cluster_id", idType))))
   }
 
-  private def clustersDistributed(p: DataFrame): DataFrame =
-    clustersDistributedVerbose(p, verbose = false)
-
-  /** The distributed min-label fixpoint, with optional per-round telemetry
-    * (graft.ClusterProbe drives a >=10M-edge synthetic graph through this
-    * path and records rounds / per-round wall — flat round times are the
-    * evidence that the per-round localCheckpoint keeps the plan from
-    * growing across iterations). */
-  private[graft] def clustersDistributedVerbose(p: DataFrame,
-                                                verbose: Boolean): DataFrame = {
+  /** The distributed min-label fixpoint. The per-round localCheckpoint
+    * keeps the plan from growing across iterations: round times stay
+    * flat on a >=10M-edge synthetic graph (SCALE_PROBE.md, round-9
+    * connected-components probe). */
+  private def clustersDistributed(p: DataFrame): DataFrame = {
     val edges = p
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
@@ -950,7 +945,6 @@ object Dedup {
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < 64) {
-      val t0 = System.nanoTime()
       val nbrMin = edges
         .join(labels.select(col("doc_id").as("dst"),
           col("cluster_id").as("nbr_label")), Seq("dst"))
@@ -968,9 +962,6 @@ object Dedup {
       changed = next.filter(col("chg")).limit(1).count()
       labels = next.drop("chg")
       rounds += 1
-      if (verbose)
-        println(f"[clusters] round $rounds%2d: changed=$changed " +
-          f"wall=${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     edges.unpersist()
     labels

@@ -87,7 +87,9 @@ object VcfPipeline {
     * (VCFDataProcessor.groovy:76 iterates the dir), tables unioned. */
   def runDir(spark: SparkSession, dir: String, trialId: String,
              genome: String = "hg19"): VariantTables = {
-    val files = new java.io.File(dir).listFiles()
+    val d = new java.io.File(dir)
+    require(d.isDirectory, s"VCF upload directory not found: $dir")
+    val files = d.listFiles()
       .filter(_.getName.toLowerCase.endsWith(".vcf"))
       .map(_.getPath).sorted
     require(files.nonEmpty, s"no .vcf files in $dir")

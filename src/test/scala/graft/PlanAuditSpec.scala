@@ -447,18 +447,36 @@ class PlanAuditSpec extends SparkSpec {
     }
 
     // the two-pass CM heavy-hitter filter: pass 2 is a literal-bitmap
-    // FILTER + exact count — one scan in the final plan (pass 1 already
-    // ran at build time to collect the counters), and never a join
-    val hh = SparkEntry.queries("sketch_heavy_hitters")(spark, dir)
-    hh.collect()
-    val hhPlan = hh.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    assert("Scan parquet".r.findAllIn(hhPlan).length == 1,
-      "heavy hitters pass 2 must be one corpus scan")
-    assert(!hhPlan.contains("Join"),
-      "heavy hitters pass 2 must filter against the literal bitmap, not join")
-    assert(hhPlan.contains("partial_count"),
-      "heavy hitters lost map-side partials")
+    // FILTER + exact count (pass 1 already ran at build time to collect
+    // the counters), never a join. Below the size gate both passes read
+    // one (term, digest) work-table, so pass 2's only scan is that
+    // checkpoint; above it the plain shape returns: one corpus scan. The
+    // regimes are simulated the way WorkTableGateSpec does.
+    def hhPlan(maxPartitionBytes: String): String = {
+      val key = "spark.sql.files.maxPartitionBytes"
+      val old = spark.conf.get(key)
+      spark.conf.set(key, maxPartitionBytes)
+      try {
+        val hh = SparkEntry.queries("sketch_heavy_hitters")(spark, dir)
+        hh.collect()
+        hh.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+      } finally spark.conf.set(key, old)
+    }
+    val workTableScan = """Scan ExistingRDD\[term#\d+,__cmh#\d+\]""".r
+    // (work-table scans, parquet scans) in pass 2's final plan
+    for ((regime, maxPartitionBytes, expected) <- Seq(
+        ("below the gate", (512L * 1024 * 1024).toString, (1, 0)),
+        ("above the gate", "4096", (0, 1)))) {
+      val plan = hhPlan(maxPartitionBytes)
+      assert(!plan.contains("Join"),
+        s"heavy hitters pass 2 $regime must filter against the literal bitmap, not join")
+      assert(plan.contains("partial_count"),
+        s"heavy hitters $regime lost map-side partials")
+      val scans = (workTableScan.findAllIn(plan).length,
+        "Scan parquet".r.findAllIn(plan).length)
+      assert(scans == expected,
+        s"heavy hitters pass 2 $regime: (work-table, parquet) scans $scans, expected $expected")
+    }
 
     // kmv overlap: one corpus scan into the bounded sketch aggregate;
     // the pair stage is a BROADCAST join of sketch rows, never data

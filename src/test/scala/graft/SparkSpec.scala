@@ -6,19 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all specs (one JVM, forked by sbt). */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
+    // the GraftCli settings by construction, on local[2] whatever the
+    // environment says
+    val s = graft.core.Session.builder(graft.core.Session.Etl, cpus = 2, master = None)
       .appName("graft-test")
-      // the engine's SQL surface loads the way production sessions do
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the CLI warehouse is trial-partitioned: merge per-upload schemas,
-      // never type-infer string partition values
-      .config("spark.sql.parquet.mergeSchema", "true")
-      .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       .getOrCreate()

@@ -168,6 +168,14 @@ class VcfReaderSpec extends SparkSpec {
     assert(t.subjectSummary.select("dataset_id").distinct().count() == 2)
   }
 
+  test("multi-VCF directory: a missing directory fails naming the path") {
+    val dir = Files.createTempDirectory("vcf").resolve("absent").toString
+    val e = intercept[IllegalArgumentException] {
+      graft.pipeline.VcfPipeline.runDir(spark, dir, "GSE0")
+    }
+    assert(e.getMessage.contains(dir))
+  }
+
   test("subject summary: R/V variant + variantFormat encoding, reference flag") {
     val ss = VcfReader.subjectSummary(
       VcfReader.variants(spark, vcfPath), Seq("S1", "S2"), "TR1")
