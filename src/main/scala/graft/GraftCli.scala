@@ -1,13 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.regex.Pattern
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import graft.core.StudyDiscovery
+import graft.core.{Ids, StudyDiscovery}
 import graft.operators.StudyOps
-import graft.pipeline.{AcghPipeline, ChromRegion, ClinicalPipeline}
-import graft.sources.{AcghMelt, ClinicalMapping, TsvReader}
+import graft.pipeline.{AcghPipeline, ChromRegion, ClinicalPipeline, LoadSamples}
+import graft.sources.{AcghMelt, ClinicalMapping, OmicsSources, TsvReader}
 
 /** The thin operations driver — the engine's `tm_etl` counterpart
   * (reference CommandLineTool.groovy:36-62, DirectoryProcessor.groovy:
@@ -379,11 +380,10 @@ object GraftCli {
       .filter(col("sourcesystem_cd").startsWith(studyId + ":"))
       .select(col("sourcesystem_cd").as("usubjid"), col("patient_num"))
       .join(studySubjects, Seq("usubjid"), "left_semi")
-    val maxPatient = oldPatients.agg(coalesce(max(col("patient_num")), lit(0L)))
-      .collect()(0).getLong(0)
-    val freshIds = graft.core.Ids.denseIds(
+    val freshIds = Ids.denseIdsAfter(
       studySubjects.join(reused, Seq("usubjid"), "left_anti"),
-      Seq("usubjid"), "patient_num", startAt = maxPatient + 1)
+      Seq("usubjid"), "patient_num",
+      oldPatients.agg(coalesce(max(col("patient_num")), lit(0L))))
     // one row per study subject — broadcastable at any warehouse size
     val idMap = broadcast(
       reused.unionByName(freshIds.select(col("usubjid"), col("patient_num"))))
@@ -457,16 +457,121 @@ object GraftCli {
     studyId
   }
 
+  // ------------------------------------- omics sample-mapping protocol
+  //
+  // The I2B2_LOAD_SAMPLES / I2B2_ADD_PLATFORM rules every omics upload
+  // shares: the sample-map header, the de_gpl_info replace row, the
+  // warehouse-wide assay sequence and the per-(trial, source_cd) mapping
+  // replace. Each rule lives here once; the uploads call these directly.
+
+  private def findFile(files: Seq[Path], rx: String): Option[Path] =
+    files.find(_.getFileName.toString.matches(rx))
+
+  private val GplInfoSchema = Seq("platform" -> StringType,
+    "title" -> StringType, "organism" -> StringType,
+    "marker_type" -> StringType, "release_nbr" -> StringType)
+
+  /** Staging read of a subject-sample mapping file with the reference's
+    * fuzzy header tolerance (STUDY_ID/TRIAL_NAME, SAMPLE_ID/SAMPLE_CD,
+    * TISSUETYPE/TISSUE_TYPE, ATTR1/ATTRIBUTE_1 — incl. the mirna-seq
+    * fixture's ATTRITBUTE_ typo); present-but-empty cells become NULL. */
+  def readOmicsSampleMap(spark: SparkSession, path: String): DataFrame = {
+    val raw = TsvReader.read(spark, path)
+    def find(rx: String): Option[String] =
+      raw.columns.find(_.trim.toUpperCase.matches(rx))
+    def req(rx: String): String =
+      find(rx).getOrElse(sys.error(s"$path: no column matching $rx"))
+    def nz(c: org.apache.spark.sql.Column) =
+      when(length(coalesce(c, lit(""))) > 0, c)
+    def opt(rx: String) =
+      find(rx).map(n => nz(col(n))).getOrElse(lit(null).cast(StringType))
+    raw.select(
+      upper(col(req("^(STUDY[_ ]?ID|TRIAL[_ ]?NAME)$"))).as("study_id"),
+      opt("^SITE[_ ]?ID$").as("site_id"),
+      col(req("^SUBJECT[_ ]?ID$")).as("subject_id"),
+      col(req("^SAMPLE[_ ]?(ID|CD)$")).as("sample_cd"),
+      opt("^PLATFORM$").as("platform"),
+      opt("^TISSUE[_ ]?TYPE$").as("tissue_type"),
+      opt("^ATTR\\w*[_ ]?1$").as("attribute_1"),
+      opt("^ATTR\\w*[_ ]?2$").as("attribute_2"),
+      opt("^CATEGORY[_ ]?CD$").as("category_cd"),
+      opt("^SOURCE[_ ]?CD$").as("source_cd"))
+  }
+
+  /** (study id, platform, source_cd) of a staged sample map in one job:
+    * the first row's study id and the first non-null platform and
+    * source_cd in file order (source_cd defaults to STD). A sample map
+    * is one row per sample, so its three columns collect whole. */
+  private def sampleMapHeader(sampleMap: DataFrame, file: Path): (String, String, String) = {
+    val rows = sampleMap.select("study_id", "platform", "source_cd").collect()
+    if (rows.isEmpty) sys.error(s"$file: no sample rows")
+    def firstSet(i: Int) = rows.iterator.map(_.getString(i)).find(_ != null)
+    (rows.head.getString(0),
+      firstSet(1).getOrElse(sys.error(s"$file: no PLATFORM value")),
+      firstSet(2).getOrElse("STD"))
+  }
+
+  /** The `# KEY: value` meta header of the upload's `<platform>.txt`, if
+    * the folder has one. */
+  private def platformMeta(spark: SparkSession, files: Seq[Path],
+                           platform: String): Map[String, String] =
+    findFile(files, s"(?i)${Pattern.quote(platform)}\\.txt")
+      .map(pf => OmicsSources.readPlatform(spark, pf.toString)._1)
+      .getOrElse(Map.empty)
+
+  /** I2B2_ADD_PLATFORM: the platform's de_gpl_info row and the registry
+    * with that row replacing the platform's old one. */
+  private def addPlatform(spark: SparkSession, wh: Path, platform: String,
+                          meta: Map[String, String],
+                          markerType: String): (DataFrame, DataFrame) = {
+    val gplRow = spark.createDataFrame(java.util.List.of(
+      Row(platform, meta.getOrElse("PLATFORM_TITLE", platform),
+        meta.getOrElse("PLATFORM_SPECIES", "Homo sapiens"), markerType, null)),
+      StructType(GplInfoSchema.map { case (n, t) => StructField(n, t) }))
+    (gplRow, readTable2(spark, wh, "de_gpl_info", GplInfoSchema)
+      .filter(!(col("platform") <=> lit(platform)))
+      .unionByName(gplRow, allowMissingColumns = true))
+  }
+
+  /** Assay ids for the distinct `samples` rows in sample_cd order,
+    * continuing past the max assay id of the warehouse's `oldMapping`
+    * (the reference's global assay sequence); the max rides in the id
+    * job's own round trip. */
+  private def assayIds(oldMapping: DataFrame, samples: DataFrame): DataFrame =
+    Ids.denseIdsAfter(samples.distinct(), Seq("sample_cd"), "assay_id",
+      oldMapping.agg(coalesce(max(col("assay_id")), lit(0L))))
+
+  /** LOAD_SAMPLES' node-typed mapping rows with the per-sample assay ids
+    * (sample_cd, assay_id) backfilled. */
+  private def withAssayIds(mapping: DataFrame, ids: DataFrame): DataFrame =
+    mapping.drop("assay_id").join(broadcast(ids), Seq("sample_cd"), "left")
+
+  /** The mapping replace per (trial, source_cd), like I2B2_LOAD_SAMPLES'
+    * delete: the trial partition of `oldMapping` keeps its OTHER
+    * source_cd rows (sibling datatypes coexist; the read is
+    * partition-pruned) and takes `fresh`, stamped with `srcCd`, as this
+    * upload's rows. */
+  private def stageSampleMapping(oldMapping: DataFrame, wh: Path, studyId: String,
+                                 srcCd: String, fresh: DataFrame): StagedWrite =
+    stagePart(oldMapping
+        .filter(col("trial_name") <=> lit(studyId) &&
+          coalesce(col("source_cd"), lit("STD")) =!= srcCd)
+        .unionByName(fresh.withColumn("source_cd", lit(srcCd)),
+          allowMissingColumns = true),
+      wh, "de_subject_sample_mapping", Seq(studyId))
+
   // ---------------------------------------------------------- aCGH upload
 
+  /** aCGH upload. Its sample-map reader keeps empty PLATFORM/CATEGORY_CD
+    * cells as "" (readOmicsSampleMap makes them NULL, which LoadSamples
+    * turns into different node paths), and its mapping rows replace the
+    * whole trial partition. */
   def uploadAcgh(spark: SparkSession, dir: Path, topNodeParent: String,
                  studyLabel: String, wh: Path): String = {
     val files = listDir(dir)
-    def findFile(rx: String): Option[Path] =
-      files.find(p => p.getFileName.toString.matches(rx))
-    val mapFile = findFile("(?i).+_Subject_Sample_Mapping_File(_GPL\\d+)*\\.txt")
+    val mapFile = findFile(files, "(?i).+_Subject_Sample_Mapping_File(_GPL\\d+)*\\.txt")
       .getOrElse(sys.error(s"$dir: no subject-sample mapping file"))
-    val dataFile = findFile("(?i).+_acgh_data(_GPL\\d+)*\\.txt")
+    val dataFile = findFile(files, "(?i).+_acgh_data(_GPL\\d+)*\\.txt")
       .getOrElse(sys.error(s"$dir: no aCGH data file"))
 
     val raw = TsvReader.read(spark, mapFile.toString)
@@ -483,10 +588,7 @@ object GraftCli {
       optCol("ATTR2").as("attribute_2"),
       col("CATEGORY_CD").as("category_cd"),
       col("SOURCE_CD").as("source_cd"))
-    val studyId = sampleMap.select(col("study_id")).limit(1)
-      .collect().head.getString(0)
-    val platform = sampleMap.select(col("platform")).limit(1)
-      .collect().head.getString(0)
+    val (studyId, platform, _) = sampleMapHeader(sampleMap, mapFile)
 
     // platform file: <platform>_region_platform.txt or <platform>.txt
     // (ACGHDataProcessor.groovy:103-106)
@@ -494,11 +596,8 @@ object GraftCli {
       readTable2(spark, wh, "de_chromosomal_region",
         Seq("region_id" -> LongType, "gpl_id" -> StringType,
           "region_name" -> StringType)),
-      readTable2(spark, wh, "de_gpl_info",
-        Seq("platform" -> StringType, "title" -> StringType,
-          "organism" -> StringType, "marker_type" -> StringType,
-          "release_nbr" -> StringType)))
-    val registry = findFile(s"(?i)${java.util.regex.Pattern.quote(platform)}(_region_platform)?\\.txt") match {
+      readTable2(spark, wh, "de_gpl_info", GplInfoSchema))
+    val registry = findFile(files, s"(?i)${Pattern.quote(platform)}(_region_platform)?\\.txt") match {
       case Some(pf) =>
         val (meta, staged) = ChromRegion.readAcghPlatform(spark, pf.toString, platform)
         val prior = readRegistryTables()
@@ -554,7 +653,7 @@ object GraftCli {
     * folders) are kept, not duplicated. */
   def persistOntology(spark: SparkSession, wh: Path, studyId: String,
                       topNode: String,
-                      ls: graft.pipeline.LoadSamples.LoadSamplesTables): Unit = {
+                      ls: LoadSamples.LoadSamplesTables): Unit = {
     val leafFrame = ls.sampleFacts
       .join(ls.nodes.filter(col("node_type") === "LEAF")
         .select(col("concept_cd"), col("leaf_node")), Seq("concept_cd"))
@@ -650,33 +749,6 @@ object GraftCli {
     "METABOLOMICS" -> HighDimConfig("(?i).+_METABOLOMICS_Data_[RLT].*\\.txt",
       "METABOLOMICS", "de_subject_metabolomics_data"))
 
-  /** Staging read of a subject-sample mapping file with the reference's
-    * fuzzy header tolerance (STUDY_ID/TRIAL_NAME, SAMPLE_ID/SAMPLE_CD,
-    * TISSUETYPE/TISSUE_TYPE, ATTR1/ATTRIBUTE_1 — incl. the mirna-seq
-    * fixture's ATTRITBUTE_ typo); present-but-empty cells become NULL. */
-  def readOmicsSampleMap(spark: SparkSession, path: String): DataFrame = {
-    val raw = TsvReader.read(spark, path)
-    def find(rx: String): Option[String] =
-      raw.columns.find(_.trim.toUpperCase.matches(rx))
-    def req(rx: String): String =
-      find(rx).getOrElse(sys.error(s"$path: no column matching $rx"))
-    def nz(c: org.apache.spark.sql.Column) =
-      when(length(coalesce(c, lit(""))) > 0, c)
-    def opt(rx: String) =
-      find(rx).map(n => nz(col(n))).getOrElse(lit(null).cast(StringType))
-    raw.select(
-      upper(col(req("^(STUDY[_ ]?ID|TRIAL[_ ]?NAME)$"))).as("study_id"),
-      opt("^SITE[_ ]?ID$").as("site_id"),
-      col(req("^SUBJECT[_ ]?ID$")).as("subject_id"),
-      col(req("^SAMPLE[_ ]?(ID|CD)$")).as("sample_cd"),
-      opt("^PLATFORM$").as("platform"),
-      opt("^TISSUE[_ ]?TYPE$").as("tissue_type"),
-      opt("^ATTR\\w*[_ ]?1$").as("attribute_1"),
-      opt("^ATTR\\w*[_ ]?2$").as("attribute_2"),
-      opt("^CATEGORY[_ ]?CD$").as("category_cd"),
-      opt("^SOURCE[_ ]?CD$").as("source_cd"))
-  }
-
   /** The non-mRNA high-dim upload path (RNASeq / proteomics / RBM /
     * miRNA qPCR / miRNA seq / metabolomics): platform meta + gpl upsert ->
     * patient upsert -> LOAD_SAMPLES node build -> datatype melt ->
@@ -687,43 +759,20 @@ object GraftCli {
   def uploadHighDim(spark: SparkSession, dir: Path, topNodeParent: String,
                     studyLabel: String, wh: Path, cfg: HighDimConfig): String = {
     val files = listDir(dir)
-    def findFile(rx: String): Option[Path] =
-      files.find(p => p.getFileName.toString.matches(rx))
-    val mapFile = findFile("(?i).+Subject_Sample_Mapping_File.*\\.txt")
+    val mapFile = findFile(files, "(?i).+Subject_Sample_Mapping_File.*\\.txt")
       .getOrElse(sys.error(s"$dir: no subject-sample mapping file"))
-    val dataFile = findFile(cfg.dataRx)
+    val dataFile = findFile(files, cfg.dataRx)
       .getOrElse(sys.error(s"$dir: no data file matching ${cfg.dataRx}"))
 
     val sampleMap = readOmicsSampleMap(spark, mapFile.toString)
-    val studyId = sampleMap.select(col("study_id")).limit(1)
-      .collect().head.getString(0)
-    val platform = sampleMap.filter(col("platform").isNotNull)
-      .select(col("platform")).limit(1).collect().head.getString(0)
-    val srcCd = sampleMap.filter(col("source_cd").isNotNull)
-      .select(col("source_cd")).limit(1).collect()
-      .headOption.map(_.getString(0)).getOrElse("STD")
-
-    val meta = findFile(s"(?i)${java.util.regex.Pattern.quote(platform)}\\.txt")
-      .map(pf => graft.sources.OmicsSources.readPlatform(spark, pf.toString)._1)
-      .getOrElse(Map.empty[String, String])
-    val gplRow = spark.createDataFrame(java.util.List.of(
-      org.apache.spark.sql.Row(platform,
-        meta.getOrElse("PLATFORM_TITLE", platform),
-        meta.getOrElse("PLATFORM_SPECIES", "Homo sapiens"),
-        cfg.markerType, null)),
-      StructType(Seq("platform", "title", "organism", "marker_type",
-        "release_nbr").map(StructField(_, StringType))))
-    val gplInfo = readTable2(spark, wh, "de_gpl_info",
-      Seq("platform" -> StringType, "title" -> StringType,
-        "organism" -> StringType, "marker_type" -> StringType,
-        "release_nbr" -> StringType))
-      .filter(!(col("platform") <=> lit(platform)))
-      .unionByName(gplRow, allowMissingColumns = true)
+    val (studyId, platform, srcCd) = sampleMapHeader(sampleMap, mapFile)
+    val (gplRow, gplInfo) = addPlatform(spark, wh, platform,
+      platformMeta(spark, files, platform), cfg.markerType)
 
     val patients = AcghPipeline.ensurePatients(spark,
       readTable(spark, wh, "patient_dimension"), sampleMap, studyId)
     val topNode = s"$topNodeParent\\$studyLabel\\"
-    val ls = graft.pipeline.LoadSamples.run(spark, studyId, topNode,
+    val ls = LoadSamples.run(spark, studyId, topNode,
       sampleMap, gplRow, patients, markerType = cfg.markerType,
       platformNodeFromTitle = cfg.platformNodeFromTitle)
 
@@ -731,8 +780,8 @@ object GraftCli {
     val sampleCds = sampleMap.select(col("sample_cd")).distinct()
       .collect().map(_.getString(0)).toSeq
     val melted = cfg.meltKind match {
-      case "PROTEIN" => graft.sources.OmicsSources.meltProtein(data)
-      case "RBM_LONG" => graft.sources.OmicsSources.readRbmLong(data)
+      case "PROTEIN" => OmicsSources.meltProtein(data)
+      case "RBM_LONG" => OmicsSources.readRbmLong(data)
       case _ =>
         // the probe key column by the platform readers' fuzzy priority
         // (metabolomics' combined file keys on HMDB mid-row, matrices on
@@ -742,7 +791,7 @@ object GraftCli {
           .flatMap(rx => data.columns.find(_.trim.toUpperCase.matches(rx)))
           .headOption.getOrElse(data.columns.head)
         val present = sampleCds.filter(data.columns.contains)
-        graft.sources.OmicsSources.meltMatrix(
+        OmicsSources.meltMatrix(
           data.select(id, present: _*), idCol = id)
     }
     val pre =
@@ -752,38 +801,23 @@ object GraftCli {
           .agg(avg(col("intensity_value")).as("intensity_value"))
       else melted.select(col("probeset_id"), col("sample_id"),
         col("intensity_value"))
-    val dataType = graft.sources.OmicsSources
-      .dataTypeFromFileName(dataFile.getFileName.toString)
+    val dataType = OmicsSources.dataTypeFromFileName(dataFile.getFileName.toString)
     val z = ZScore.pipeline(pre, Seq("probeset_id"), "intensity_value",
       dataType = dataType, logBase = 2.0, zeroGuard = cfg.zeroGuard,
       logRoundDp = cfg.logRoundDp, customLog = cfg.customLog)
 
     val oldMapping = readTable(spark, wh, "de_subject_sample_mapping")
-    val maxAssay = oldMapping.agg(coalesce(max(col("assay_id")), lit(0L)))
-      .collect()(0).getLong(0)
-    val assayIds = graft.core.Ids.denseIds(
-      sampleMap.select(col("sample_cd")).distinct(),
-      Seq("sample_cd"), "assay_id", startAt = maxAssay + 1)
+    val ids = assayIds(oldMapping, sampleMap.select(col("sample_cd")))
     val facts = z
-      .join(broadcast(assayIds.select(col("sample_cd").as("sample_id"),
+      .join(broadcast(ids.select(col("sample_cd").as("sample_id"),
         col("assay_id"))), Seq("sample_id"))
       .withColumn("trial_name", lit(studyId))
 
-    // the mapping replace is per (trial, source_cd) like I2B2_LOAD_SAMPLES'
-    // delete — the trial partition's OTHER source_cd rows survive the
-    // partition rewrite (partition-pruned read), sibling datatypes coexist
     val staged = Seq(
       stagePart(patients, wh, "patient_dimension", Seq(studyId)),
       stageWhole(gplInfo, wh, "de_gpl_info"),
-      stagePart(
-        oldMapping.filter(col("trial_name") <=> lit(studyId) &&
-            coalesce(col("source_cd"), lit("STD")) =!= srcCd)
-          .unionByName(
-            ls.sampleMapping.drop("assay_id")
-              .join(broadcast(assayIds), Seq("sample_cd"), "left")
-              .withColumn("source_cd", lit(srcCd)),
-            allowMissingColumns = true),
-        wh, "de_subject_sample_mapping", Seq(studyId)),
+      stageSampleMapping(oldMapping, wh, studyId, srcCd,
+        withAssayIds(ls.sampleMapping, ids)),
       stagePart(facts, wh, cfg.factsTable, Seq(studyId)))
     // the ontology build re-reads the OLD star through ls's lineage
     // (patients scans patient_dimension): run it BEFORE the swap; its own
@@ -801,7 +835,6 @@ object GraftCli {
     * become samples under the default `GWAS+GWAS Plink` category. */
   def uploadGwasPlink(spark: SparkSession, dir: Path, topNodeParent: String,
                       studyLabel: String, wh: Path): String = {
-    import graft.sources.OmicsSources
     val mapFile = listDir(dir)
       .find(_.getFileName.toString.matches("(?i).*Mapping.*File.*\\.txt"))
       .getOrElse(sys.error(s"$dir: no mapping file"))
@@ -824,26 +857,14 @@ object GraftCli {
       readTable(spark, wh, "patient_dimension"), sampleMap, studyId)
     val noGpl = emptyTable(spark, Seq("platform" -> StringType,
       "title" -> StringType, "marker_type" -> StringType))
-    val ls = graft.pipeline.LoadSamples.run(spark, studyId,
+    val ls = LoadSamples.run(spark, studyId,
       s"$topNodeParent\\$studyLabel\\", sampleMap, noGpl, patients)
 
     val oldMapping = readTable(spark, wh, "de_subject_sample_mapping")
-    val maxAssay = oldMapping.agg(coalesce(max(col("assay_id")), lit(0L)))
-      .collect()(0).getLong(0)
-    val assayIds = graft.core.Ids.denseIds(
-      sampleMap.select(col("sample_cd")).distinct(),
-      Seq("sample_cd"), "assay_id", startAt = maxAssay + 1)
     val staged = Seq(
       stagePart(patients, wh, "patient_dimension", Seq(studyId)),
-      stagePart(
-        oldMapping.filter(col("trial_name") <=> lit(studyId) &&
-            coalesce(col("source_cd"), lit("STD")) =!= "STD")
-          .unionByName(
-            ls.sampleMapping.drop("assay_id")
-              .join(broadcast(assayIds), Seq("sample_cd"), "left")
-              .withColumn("source_cd", lit("STD")),
-            allowMissingColumns = true),
-        wh, "de_subject_sample_mapping", Seq(studyId)),
+      stageSampleMapping(oldMapping, wh, studyId, "STD", withAssayIds(
+        ls.sampleMapping, assayIds(oldMapping, sampleMap.select(col("sample_cd"))))),
       stagePart(lob, wh, "plink_data", Seq(studyId)))
     persistOntology(spark, wh, studyId, s"$topNodeParent\\$studyLabel\\", ls)
     commitStaged(spark, wh, staged)
@@ -905,69 +926,36 @@ object GraftCli {
   def uploadSnp(spark: SparkSession, dir: Path, topNodeParent: String,
                 studyLabel: String, wh: Path): String = {
     val files = listDir(dir)
-    def findFile(rx: String): Option[Path] =
-      files.find(p => p.getFileName.toString.matches(rx))
-    val mapFile = findFile("(?i).+Subject_Sample_Mapping_File.*\\.txt")
+    val mapFile = findFile(files, "(?i).+Subject_Sample_Mapping_File.*\\.txt")
       .getOrElse(sys.error(s"$dir: no subject-sample mapping file"))
-    val rawMapping = TsvReader.read(spark, mapFile.toString)
     val sampleMap = readOmicsSampleMap(spark, mapFile.toString)
-    val studyId = sampleMap.select(col("study_id")).limit(1)
-      .collect().head.getString(0)
-    val platform = sampleMap.filter(col("platform").isNotNull)
-      .select(col("platform")).limit(1).collect().head.getString(0)
-    val srcCd = sampleMap.filter(col("source_cd").isNotNull)
-      .select(col("source_cd")).limit(1).collect()
-      .headOption.map(_.getString(0)).getOrElse("STD")
+    val (studyId, platform, srcCd) = sampleMapHeader(sampleMap, mapFile)
 
-    val (callsFiles, cnFiles) =
-      graft.pipeline.SnpAndSerial.snpFileLists(rawMapping, dir.toString)
+    val (callsFiles, cnFiles) = graft.pipeline.SnpAndSerial.snpFileLists(
+      TsvReader.read(spark, mapFile.toString), dir.toString)
     val merged = graft.pipeline.SnpAndSerial.loadSnp(spark, callsFiles, cnFiles)
 
-    val meta = findFile(s"(?i)${java.util.regex.Pattern.quote(platform)}\\.txt")
-      .map(pf => graft.sources.OmicsSources.readPlatform(spark, pf.toString)._1)
-      .getOrElse(Map.empty[String, String])
-    val gplRow = spark.createDataFrame(java.util.List.of(
-      org.apache.spark.sql.Row(platform,
-        meta.getOrElse("PLATFORM_TITLE", platform),
-        meta.getOrElse("PLATFORM_SPECIES", "Homo sapiens"), "SNP", null)),
-      StructType(Seq("platform", "title", "organism", "marker_type",
-        "release_nbr").map(StructField(_, StringType))))
-    val gplInfo = readTable2(spark, wh, "de_gpl_info",
-      Seq("platform" -> StringType, "title" -> StringType,
-        "organism" -> StringType, "marker_type" -> StringType,
-        "release_nbr" -> StringType))
-      .filter(!(col("platform") <=> lit(platform)))
-      .unionByName(gplRow, allowMissingColumns = true)
+    val (gplRow, gplInfo) = addPlatform(spark, wh, platform,
+      platformMeta(spark, files, platform), "SNP")
     val patients = AcghPipeline.ensurePatients(spark,
       readTable(spark, wh, "patient_dimension"), sampleMap, studyId)
-    val ls = graft.pipeline.LoadSamples.run(spark, studyId,
+    val ls = LoadSamples.run(spark, studyId,
       s"$topNodeParent\\$studyLabel\\", sampleMap, gplRow, patients,
       markerType = "SNP")
 
     val oldMapping = readTable(spark, wh, "de_subject_sample_mapping")
-    val maxAssay = oldMapping.agg(coalesce(max(col("assay_id")), lit(0L)))
-      .collect()(0).getLong(0)
-    val assayIds = graft.core.Ids.denseIds(
-      sampleMap.select(col("sample_cd")).distinct(),
-      Seq("sample_cd"), "assay_id", startAt = maxAssay + 1)
+    val ids = assayIds(oldMapping, sampleMap.select(col("sample_cd")))
     val facts = merged
       .withColumnRenamed("gsm_num", "sample_id")
-      .join(broadcast(assayIds.select(col("sample_cd").as("sample_id"),
+      .join(broadcast(ids.select(col("sample_cd").as("sample_id"),
         col("assay_id"))), Seq("sample_id"))
       .withColumn("trial_name", lit(studyId))
 
     val staged = Seq(
       stagePart(patients, wh, "patient_dimension", Seq(studyId)),
       stageWhole(gplInfo, wh, "de_gpl_info"),
-      stagePart(
-        oldMapping.filter(col("trial_name") <=> lit(studyId) &&
-            coalesce(col("source_cd"), lit("STD")) =!= srcCd)
-          .unionByName(
-            ls.sampleMapping.drop("assay_id")
-              .join(broadcast(assayIds), Seq("sample_cd"), "left")
-              .withColumn("source_cd", lit(srcCd)),
-            allowMissingColumns = true),
-        wh, "de_subject_sample_mapping", Seq(studyId)),
+      stageSampleMapping(oldMapping, wh, studyId, srcCd,
+        withAssayIds(ls.sampleMapping, ids)),
       stagePart(facts, wh, "de_sample_snp_data", Seq(studyId)))
     persistOntology(spark, wh, studyId, s"$topNodeParent\\$studyLabel\\", ls)
     commitStaged(spark, wh, staged)
@@ -1013,17 +1001,12 @@ object GraftCli {
 
     val patients = AcghPipeline.ensurePatients(spark,
       readTable(spark, wh, "patient_dimension"), sm, studyId)
-    val oldMapping = readTable(spark, wh, "de_subject_sample_mapping")
-    val maxAssay = oldMapping.agg(coalesce(max(col("assay_id")), lit(0L)))
-      .collect()(0).getLong(0)
     // one assay per distinct (subject, sample) — a MultiVCF mapping file
     // repeats SAMPLE_CD once per file, and per-ROW ids would both mint
     // duplicate assay_ids and fan out the summary join below
-    val mapping = graft.core.Ids.denseIds(
-        sm.select(col("subject_id"), col("sample_cd")).distinct(),
-        Seq("sample_cd"), "assay_id", startAt = maxAssay + 1)
+    val oldMapping = readTable(spark, wh, "de_subject_sample_mapping")
+    val mapping = assayIds(oldMapping, sm.select(col("subject_id"), col("sample_cd")))
       .withColumn("trial_name", lit(studyId))
-      .withColumn("source_cd", lit("VCF"))
     val summary = t.subjectSummary.join(
       broadcast(mapping.select(col("sample_cd").as("sample_id"),
         col("assay_id"))), Seq("sample_id"), "left")
@@ -1042,13 +1025,7 @@ object GraftCli {
         listPartitionValues(wh, n).filter(_.startsWith(studyId + ":")))
     val staged = Seq(
       stagePart(patients, wh, "patient_dimension", Seq(studyId)),
-      // replace per (trial, source_cd) — a study's OTHER datatype
-      // mappings (expression, aCGH) must survive a VCF re-upload
-      stagePart(
-        oldMapping.filter(col("trial_name") <=> lit(studyId) &&
-            coalesce(col("source_cd"), lit("STD")) =!= "VCF")
-          .unionByName(mapping, allowMissingColumns = true),
-        wh, "de_subject_sample_mapping", Seq(studyId)),
+      stageSampleMapping(oldMapping, wh, studyId, "VCF", mapping),
       stageWhole(replaceDatasets(
         readTable2(spark, wh, "de_variant_dataset",
           Seq("dataset_id" -> StringType)), t.dataset),
@@ -1085,8 +1062,7 @@ object GraftCli {
           lit("E").as("tval_char"), lit(studyId).as("sourcesystem_cd"))
         .distinct()
       persistOntology(spark, wh, studyId, topNode,
-        graft.pipeline.LoadSamples.LoadSamplesTables(
-          nodes, mapping, sampleFacts))
+        LoadSamples.LoadSamplesTables(nodes, mapping, sampleFacts))
     }
     commitStaged(spark, wh, staged)
     studyId
@@ -1102,47 +1078,24 @@ object GraftCli {
                        studyLabel: String, wh: Path,
                        useFirstGeneId: Boolean): String = {
     val files = listDir(dir)
-    def findFile(rx: String): Option[Path] =
-      files.find(p => p.getFileName.toString.matches(rx))
-    val mapFile = findFile("(?i).+_Subject_Sample_Mapping_File(_GPL\\d+)*\\.txt")
+    val mapFile = findFile(files, "(?i).+_Subject_Sample_Mapping_File(_GPL\\d+)*\\.txt")
       .getOrElse(sys.error(s"$dir: no subject-sample mapping file"))
-    val dataFile = findFile("(?i).+_Gene_Expression_Data_[RLT](_GPL\\d+)*\\.txt")
+    val dataFile = findFile(files, "(?i).+_Gene_Expression_Data_[RLT](_GPL\\d+)*\\.txt")
       .getOrElse(sys.error(s"$dir: no *_Gene_Expression_Data_{R,L,T}.txt"))
 
-    val raw = TsvReader.read(spark, mapFile.toString)
-    def nz(n: String) =
-      if (raw.columns.contains(n))
-        when(length(coalesce(col(n), lit(""))) > 0, col(n))
-      else lit(null).cast(StringType)
-    val sampleMap = raw.select(
-      upper(col("STUDY_ID")).as("study_id"),
-      nz("SITE_ID").as("site_id"),
-      col("SUBJECT_ID").as("subject_id"),
-      col("SAMPLE_ID").as("sample_cd"),
-      nz("PLATFORM").as("platform"),
-      nz("TISSUETYPE").as("tissue_type"),
-      nz("ATTR1").as("attribute_1"),
-      nz("ATTR2").as("attribute_2"),
-      nz("CATEGORY_CD").as("category_cd"),
-      nz("SOURCE_CD").as("source_cd"))
+    val sampleMap = readOmicsSampleMap(spark, mapFile.toString)
       // OmicsPipeline/LoadSamples accept both naming conventions
       .withColumn("sample_id", col("sample_cd"))
       .withColumn("platform_name", col("platform"))
       .withColumn("tissuetype", col("tissue_type"))
       .withColumn("attr1", col("attribute_1"))
       .withColumn("attr2", col("attribute_2"))
-    val studyId = sampleMap.select(col("study_id")).limit(1)
-      .collect().head.getString(0)
-    val platform = sampleMap.filter(col("platform").isNotNull)
-      .select(col("platform")).limit(1).collect().head.getString(0)
-    val srcCd = sampleMap.filter(col("source_cd").isNotNull)
-      .select(col("source_cd")).limit(1).collect()
-      .headOption.map(_.getString(0)).getOrElse("STD")
+    val (studyId, platform, srcCd) = sampleMapHeader(sampleMap, mapFile)
 
-    val pf = findFile(s"(?i)${java.util.regex.Pattern.quote(platform)}\\.txt")
+    val pf = findFile(files, s"(?i)${Pattern.quote(platform)}\\.txt")
       .getOrElse(sys.error(s"$dir: no platform file $platform.txt"))
     val (meta, platformAnn) =
-      graft.sources.OmicsSources.readPlatform(spark, pf.toString, useFirstGeneId)
+      OmicsSources.readPlatform(spark, pf.toString, useFirstGeneId)
     val staged = platformAnn.select(
       lit(platform).as("gpl_id"), col("probeset_id").as("probe_id"),
       col("gene_symbol"), col("gene_id").cast(StringType).as("gene_id"),
@@ -1154,29 +1107,14 @@ object GraftCli {
     val bioMarkers = readTable2(spark, wh, "bio_marker",
       Seq("bio_marker_name" -> StringType, "organism" -> StringType,
         "primary_external_id" -> StringType, "bio_marker_type" -> StringType))
-    // de_gpl_info upsert = I2B2_ADD_PLATFORM's replace row
-    val gplInfo = readTable2(spark, wh, "de_gpl_info",
-      Seq("platform" -> StringType, "title" -> StringType,
-        "organism" -> StringType, "marker_type" -> StringType,
-        "release_nbr" -> StringType))
-      .filter(!(col("platform") <=> lit(platform)))
-      .unionByName(spark.createDataFrame(java.util.List.of(
-        org.apache.spark.sql.Row(platform,
-          meta.getOrElse("PLATFORM_TITLE", platform),
-          meta.getOrElse("PLATFORM_SPECIES", "Homo sapiens"),
-          "Gene Expression", null)),
-        StructType(Seq("platform", "title", "organism", "marker_type",
-          "release_nbr").map(StructField(_, StringType)))),
-        allowMissingColumns = true)
+    val (_, gplInfo) = addPlatform(spark, wh, platform, meta, "Gene Expression")
 
     val patients = AcghPipeline.ensurePatients(spark,
       readTable(spark, wh, "patient_dimension"), sampleMap, studyId)
     val topNode = s"$topNodeParent\\$studyLabel\\"
-    val dataType = graft.sources.OmicsSources
-      .dataTypeFromFileName(dataFile.getFileName.toString)
-    val t = graft.pipeline.OmicsPipeline.runFull(spark, studyId, topNode,
-      sampleMap,
-      graft.sources.OmicsSources.meltMatrix(TsvReader.readFast(spark, dataFile.toString)),
+    val dataType = OmicsSources.dataTypeFromFileName(dataFile.getFileName.toString)
+    val t = graft.pipeline.OmicsPipeline.runFull(spark, studyId, topNode, sampleMap,
+      OmicsSources.meltMatrix(TsvReader.readFast(spark, dataFile.toString)),
       staged, probesets0, bioMarkers, gplInfo, patients, dataType = dataType)
 
     // every plan below may re-read the OLD warehouse files (patients'
@@ -1190,22 +1128,10 @@ object GraftCli {
       stagePart(t.annotation.probesets, wh, "probeset_deapp", Seq(platform)),
       stagePart(t.annotation.mrnaAnnotation, wh, "de_mrna_annotation",
         Seq(platform)),
-      // replace per (trial, source_cd) like I2B2_LOAD_SAMPLES's delete
-      // (source_cd defaults to 'STD'), so sibling datatypes survive
-      stagePart(
-        readTable(spark, wh, "de_subject_sample_mapping")
-          .filter(col("trial_name") <=> lit(studyId) &&
-            coalesce(col("source_cd"), lit("STD")) =!= srcCd)
-          .unionByName(
-            // the node-typed mapping rows from LOAD_SAMPLES, with the
-            // assay ids the mRNA proc assigned backfilled per sample
-            t.loadSamples.sampleMapping.drop("assay_id")
-              .join(broadcast(t.omics.sampleMapping
-                .select(col("sample_id").as("sample_cd"),
-                  col("assay_id"))), Seq("sample_cd"), "left")
-              .withColumn("source_cd", lit(srcCd)),
-            allowMissingColumns = true),
-        wh, "de_subject_sample_mapping", Seq(studyId)),
+      // the assay ids are the ones the mRNA proc assigned
+      stageSampleMapping(readTable(spark, wh, "de_subject_sample_mapping"),
+        wh, studyId, srcCd, withAssayIds(t.loadSamples.sampleMapping,
+          t.omics.sampleMapping.select(col("sample_id").as("sample_cd"), col("assay_id")))),
       stagePart(t.omics.data.withColumn("trial_name", lit(studyId)),
         wh, "de_subject_microarray_data", Seq(studyId)))
     persistOntology(spark, wh, studyId, topNode, t.loadSamples)

@@ -4,39 +4,39 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic surrogate-id assignment (the sequence replacement,
-  * SURVEY §7.3) — two shapes:
+  * SURVEY §7.3), two entry points:
   *
-  *  - [[denseIds]] / [[denseIdsAfter]]: 1..N (or max+1..max+N) in the
-  *    order of `sortCols`, computed DataFrame-native: range-partitioned
-  *    sort, per-partition record numbers from
-  *    `monotonically_increasing_id`, and a broadcast join against the
-  *    (tiny) per-partition offset table. No single-task global window and
-  *    no RDD round-trip, so the plan stays in whole-stage codegen /
-  *    columnar batches end-to-end and scales to warehouse-sized dimension
-  *    tables. Deterministic as long as `sortCols` is a total order.
-  *  - [[windowIds]]: the plain row_number form — single-partition plan,
-  *    kept ONLY for tests/comparison; nothing in a pipeline should call it.
+  *  - [[denseIds]]: 1..N in the order of `sortCols`;
+  *  - [[denseIdsAfter]]: max+1..max+N past an existing registry's max id,
+  *    the max read in the same action as the partition counts.
+  *
+  * Both are computed DataFrame-native: range-partitioned sort,
+  * per-partition record numbers from `monotonically_increasing_id`, and
+  * a broadcast join against the (tiny) per-partition offset table. No
+  * single-task global window and no RDD round-trip, so the plan stays in
+  * whole-stage codegen / columnar batches end-to-end and scales to
+  * warehouse-sized dimension tables. Deterministic as long as `sortCols`
+  * is a total order; equal to a global `row_number()` over `sortCols`
+  * (the reference form CoreSpec compares against).
   */
 object Ids {
 
-  def denseIds(df: DataFrame, sortCols: Seq[String], idCol: String,
-               startAt: Long = 1L): DataFrame =
-    assign(df, sortCols, idCol, None, startAt)
+  def denseIds(df: DataFrame, sortCols: Seq[String], idCol: String): DataFrame =
+    assign(df, sortCols, idCol, None)
 
   /** [[denseIds]] starting past an existing registry's max id: `maxIdAgg`
     * must be a single-row, single-long-column aggregate (e.g.
     * `existing.agg(coalesce(max(col("id")), lit(0L)))`); ids start at its
-    * value + 1. The aggregate is evaluated INSIDE the same driver
-    * round-trip as the partition counts — callers that previously ran a
-    * separate `collect()` for the max id save one serial Spark job, which
-    * is what dominates dimension-pipeline latency (the data itself is
-    * tiny; latency = sum of job round-trips). */
+    * value + 1. The aggregate is the broadcast side of the partition-
+    * counts action, so callers need no `collect()` of their own for the
+    * max id. It is not free: the broadcast still runs as its own Spark
+    * job, so the job count matches a separate collect. */
   def denseIdsAfter(df: DataFrame, sortCols: Seq[String], idCol: String,
                     maxIdAgg: DataFrame): DataFrame =
-    assign(df, sortCols, idCol, Some(maxIdAgg), 1L)
+    assign(df, sortCols, idCol, Some(maxIdAgg))
 
   private def assign(df: DataFrame, sortCols: Seq[String], idCol: String,
-                     maxIdAgg: Option[DataFrame], startAt: Long): DataFrame = {
+                     maxIdAgg: Option[DataFrame]): DataFrame = {
     val spark = df.sparkSession
     val n = math.max(1, spark.sessionState.conf.numShufflePartitions)
     // monotonically_increasing_id = (partition id << 33) | record number
@@ -66,7 +66,7 @@ object Ids {
           rows.headOption.map(_.getLong(2) + 1).getOrElse(1L))
       case None =>
         (countsDf.collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1),
-          startAt)
+          1L)
     }
     var acc = base
     val offsets = counts.map { case (p, c) => val o = (p, acc); acc += c; o }
@@ -77,9 +77,4 @@ object Ids {
       .withColumn(idCol, col("__off") + col("__rn"))
       .drop("__pid", "__rn", "__off")
   }
-
-  def windowIds(df: DataFrame, sortCols: Seq[String], idCol: String): DataFrame =
-    df.withColumn(idCol, row_number()
-      .over(org.apache.spark.sql.expressions.Window.orderBy(sortCols.map(col): _*))
-      .cast("long"))
 }

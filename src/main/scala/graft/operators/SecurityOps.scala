@@ -133,13 +133,12 @@ object SecurityOps {
       .select(col("search_secure_object_id")))
     (targetObj, sourceObj) match {
       case (Some(to), Some(from)) =>
-        val maxId = scalar(access.agg(max(col("auth_sec_obj_access_id"))))
-          .getOrElse(0L)
-        val copied = graft.core.Ids.denseIds(
+        val copied = graft.core.Ids.denseIdsAfter(
           access.filter(col("secure_object_id") === from)
             .select(col("auth_principal_id"), col("secure_access_level_id")),
           Seq("auth_principal_id", "secure_access_level_id"),
-          "auth_sec_obj_access_id", startAt = maxId + 1)
+          "auth_sec_obj_access_id",
+          access.agg(coalesce(max(col("auth_sec_obj_access_id")), lit(0L))))
           .withColumn("secure_object_id", lit(to))
         access.unionByName(copied.select(access.columns.map(col): _*))
       case _ => access

@@ -113,4 +113,35 @@ class GraftCliUploadSpec extends SparkSpec {
     assert(gpl.filter(col("platform") === "RNAUP1").select("title", "marker_type")
       .first() == Row("Upload RNASeq Platform", "RNASEQ"))
   }
+
+  test("a sample-mapping file without sample rows or PLATFORM fails naming the file") {
+    import scala.jdk.CollectionConverters._
+    val wh = Files.createTempDirectory("graft-upload-bad-wh")
+    def copyFixture(dt: String): Path = {
+      val dir = Files.createTempDirectory(s"graft-upload-bad-$dt")
+      val ls = Files.list(fixture(dt))
+      try ls.iterator().asScala.foreach(f => Files.copy(f, dir.resolve(f.getFileName)))
+      finally ls.close()
+      dir
+    }
+    def failure(dt: String, dir: Path): String =
+      intercept[RuntimeException](upload(wh, dt, dir)).getMessage
+    for ((dt, mapName) <- Seq(
+        "ACGH" -> "TSTUP_Subject_Sample_Mapping_File.txt",
+        "Expression" -> "TSTUP_Subject_Sample_Mapping_File.txt",
+        "RNASeq" -> "TSTUP_RNASeq_Subject_Sample_Mapping_File.txt",
+        "SNP" -> "TSTUP_SNP_Subject_Sample_Mapping_File.txt")) {
+      val dir = copyFixture(dt)
+      val mapFile = dir.resolve(mapName)
+      Files.writeString(mapFile, Files.readAllLines(mapFile).get(0) + "\n")
+      val msg = failure(dt, dir)
+      assert(msg.contains(mapFile.toString) && msg.contains("no sample rows"), s"$dt: $msg")
+    }
+    val dir = copyFixture("RNASeq")
+    val mapFile = dir.resolve("TSTUP_RNASeq_Subject_Sample_Mapping_File.txt")
+    Files.writeString(mapFile, Files.readString(mapFile).replace("RNAUP1", ""))
+    val msg = failure("RNASeq", dir)
+    assert(msg.contains(mapFile.toString) && msg.contains("no PLATFORM value"), msg)
+    assert(!Files.exists(wh.resolve("de_subject_sample_mapping.parquet")))
+  }
 }

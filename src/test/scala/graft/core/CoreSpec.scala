@@ -104,11 +104,19 @@ class AuditSpec extends SparkSpec {
 class IdsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The reference form of [[Ids.denseIds]]: a global row_number() over
+    * `sortCols` (single-partition plan). */
+  private def windowIds(df: org.apache.spark.sql.DataFrame, sortCols: Seq[String],
+                        idCol: String) =
+    df.withColumn(idCol, row_number()
+      .over(org.apache.spark.sql.expressions.Window.orderBy(sortCols.map(col): _*))
+      .cast("long"))
+
   test("denseIds equals windowIds and is deterministic across runs") {
     val df = Seq("c", "a", "b", "d").toDF("k")
     val dense = Ids.denseIds(df, Seq("k"), "id").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val windowed = Ids.windowIds(df, Seq("k"), "id").collect()
+    val windowed = windowIds(df, Seq("k"), "id").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(dense == windowed)
     assert(dense == Map("a" -> 1L, "b" -> 2L, "c" -> 3L, "d" -> 4L))
